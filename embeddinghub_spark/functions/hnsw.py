@@ -35,7 +35,9 @@ import hashlib
 import json
 import math
 import os
+from collections.abc import Mapping
 from heapq import heappop, heappush
+from types import MappingProxyType
 
 
 class HnswIndex:
@@ -62,6 +64,11 @@ class HnswIndex:
 
     def __contains__(self, key: str) -> bool:
         return key in self._vecs
+
+    def vectors(self) -> Mapping[str, tuple[float, ...]]:
+        """Read-only live view of every indexed key → vector (no copy):
+        what an exact search over the same state reads."""
+        return MappingProxyType(self._vecs)
 
     def _dist(self, a: tuple[float, ...], b: tuple[float, ...]) -> float:
         return sum((x - y) * (x - y) for x, y in zip(a, b))
@@ -378,5 +385,5 @@ class ShardedHnsw:
     def state_key(self) -> str:
         rows: dict[str, tuple] = {}
         for s in self._shards:
-            rows.update(s._vecs)
+            rows.update(s.vectors())
         return HnswIndex.digest_rows(rows)

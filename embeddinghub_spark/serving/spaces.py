@@ -13,15 +13,31 @@ unioned a new DataFrame per write: plan depth grew linearly with the
 write count and every read replayed a full window — quadratic for
 write-heavy sessions).
 
+Values are float32, like the reference's ``repeated float``: every
+write is rounded once, so get/multiget, download, the ANN index and
+both exact nearest-neighbour paths see the same numbers.
+
 Batch path: a Space can also wrap a distributed base DataFrame
 (``load_dataframe``) — e.g. a batch-built embedding table far larger
 than driver memory. Reads resolve overlay-first (newest write wins);
-``download()``/``nearest_neighbor()`` run base ∪ overlay with the
-overlay broadcast (it is driver-resident by construction).
+``download()`` runs base ∪ overlay with the overlay broadcast (it is
+driver-resident by construction).
+
+Exact nearest neighbour answers on the driver whenever the driver
+already holds every vector — an ANN index is built (it tracks every
+write since), or no base is attached (the overlay is the whole space)
+— with zero Spark jobs, like the reference's in-process
+NearestNeighbor. Only an index-less distributed base runs the Spark
+``knn_bruteforce`` job; both paths return identical lists.
 """
 
 from __future__ import annotations
 
+import math
+from array import array
+from collections.abc import Mapping, Sequence
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -32,7 +48,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from embeddinghub_spark.functions.hnsw import HnswIndex
 from embeddinghub_spark.functions.vector import knn_bruteforce
+from embeddinghub_spark.observability import record_branch
 
 _SCHEMA = StructType(
     [
@@ -44,6 +62,35 @@ _SCHEMA = StructType(
 
 class FrozenSpaceError(RuntimeError):
     pass
+
+
+def _l2_topk(
+    vectors: Mapping[str, Sequence[float]],
+    query: Sequence[float],
+    k: int,
+    exclude: str | None = None,
+) -> list[str]:
+    """Exact L2 top-k keys over driver-resident vectors, bit-identical
+    to ``knn_bruteforce(metric="l2")``: float64 squared differences
+    summed one dimension at a time, left to right (the Spark fold's
+    order), then ``sqrt``; ordered by (distance asc, key asc), which is
+    its (score desc, neighbor_id asc) with score = -distance. Only
+    ``exclude`` is left out."""
+    keys = [kk for kk in vectors if kk != exclude]
+    if not keys:
+        return []
+    mat = np.array([vectors[kk] for kk in keys], dtype=np.float64)
+    q = np.asarray(query, dtype=np.float64)
+    acc = np.zeros(len(keys))
+    for i in range(mat.shape[1]):
+        diff = mat[:, i] - q[i]
+        acc += diff * diff
+    dist = np.sqrt(acc)
+    cand = range(len(keys))
+    if k < len(keys):  # keep every key tied with the k-th distance
+        cand = np.flatnonzero(dist <= np.partition(dist, k - 1)[k - 1]).tolist()
+    dist = dist.tolist()
+    return [keys[i] for i in sorted(cand, key=lambda i: (dist[i], keys[i]))[:k]]
 
 
 class Space:
@@ -58,17 +105,25 @@ class Space:
         self._base: DataFrame | None = None  # optional distributed table
         self._bucket_dirs: dict[int, str] = {}  # serving index (load_dataframe)
         self._n_buckets: int = 0
+        self._ann: HnswIndex | None = None  # driver HNSW (build_ann_index)
 
     def _check_mutable(self):
         if self.frozen:
             raise FrozenSpaceError(f"space {self.name} is frozen")  # server.cc FreezeSpace
 
-    def _check_dims(self, key: str, v) -> list[float]:
+    def _check_dims(self, key: str | None, v) -> list[float]:
+        """Dim-check ``v`` and round it to float32 (``key=None``: a
+        query vector); None, NaN, ±inf and float32 overflow raise."""
+        what = "query vector" if key is None else f"embedding for {key!r}"
         if len(v) != self.dims:
-            raise ValueError(
-                f"embedding for {key!r} has dim {len(v)}, space expects {self.dims}"
-            )
-        return [float(x) for x in v]
+            raise ValueError(f"{what} has dim {len(v)}, space expects {self.dims}")
+        try:
+            out = array("f", v).tolist()
+        except TypeError as e:
+            raise ValueError(f"{what}: {e}") from None
+        if not all(map(math.isfinite, out)):
+            raise ValueError(f"{what} has a NaN, infinite or out-of-float32-range component")
+        return out
 
     def load_dataframe(
         self,
@@ -89,12 +144,18 @@ class Space:
         full-scan ``filter(key==…).collect()`` job: the wrong latency
         model for serving. ``serving_path=None`` uses a temp dir; pass
         ``n_buckets`` ≥ |keys|/50k to keep bucket files small.
+
+        Drops any ANN index (it holds the old base): approximate
+        queries raise and exact ones run on Spark until
+        ``build_ann_index()`` runs again.
         """
         self._check_mutable()
         import os
         import tempfile
 
         from embeddinghub_spark.sources.tables import _bucket_expr, _write_bucketed
+
+        self._ann = None  # built over the old base: rebuild to serve approx
 
         base = df.select(
             F.col("key").cast("string"),
@@ -156,10 +217,9 @@ class Space:
         self._check_mutable()
         staged = {k: self._check_dims(k, v) for k, v in items.items()}
         self._buf.update(staged)
-        ann = getattr(self, "_ann", None)
-        if ann is not None:  # keep the HNSW current, like the reference
+        if self._ann is not None:  # keep the HNSW current, like the reference
             for kk in sorted(staged):
-                ann.add(kk, staged[kk])
+                self._ann.add(kk, staged[kk])
 
     def set(self, key: str, embedding: list[float]) -> None:
         self.multiset({key: embedding})
@@ -226,8 +286,6 @@ class Space:
         builds the same graph anywhere."""
         import os
 
-        from embeddinghub_spark.functions.hnsw import HnswIndex
-
         rows = {r["key"]: r["embedding"] for r in self._current().collect()}
         idx_path = (
             os.path.join(persist_dir, f"{self.name}.hnsw.json")
@@ -253,6 +311,14 @@ class Space:
         self._ann = idx
         return len(idx)
 
+    def _resident(self) -> Mapping[str, Sequence[float]] | None:
+        """Every vector of the space if the driver already holds them:
+        the ANN index (it tracks every write since its build) or, with
+        no base attached, the overlay. None for an index-less base."""
+        if self._ann is not None:
+            return self._ann.vectors()
+        return self._buf if self._base is None else None
+
     def nearest_neighbor(
         self,
         k: int,
@@ -262,34 +328,47 @@ class Space:
         ef: int | None = None,
     ) -> list[str]:
         """NearestNeighbor (server.cc:152-198): L2 metric like the
-        hnswlib index (index.cc L2 space); query by key or raw vector;
-        a key query excludes itself like the reference's API.
+        hnswlib index (index.cc L2 space); query by key or raw vector
+        (dim-checked and rounded to float32 like a write); a key query
+        excludes itself like the reference's API.
 
         ``approximate=True`` answers from the driver-side HNSW built
         by ``build_ann_index`` (raising if none was built) — the
-        reference's actual serving path; the default stays the EXACT
-        Spark brute force (the certified oracle shape)."""
+        reference's actual serving path. The exact default answers on
+        the driver, with no Spark job, whenever the driver holds every
+        vector (an ANN index is built, or no base is attached); only an
+        index-less distributed base runs the Spark brute force. Both
+        exact paths return the same list, ties broken by key."""
         if (key is None) == (vector is None):
             raise ValueError("provide exactly one of key / vector")
+        if k < 1:
+            raise ValueError(f"k must be >= 1, got {k}")
+        resident = None if approximate else self._resident()
         if vector is None:
-            vector = self.get(key)
+            vector = self.get(key) if resident is None else resident.get(key)
             if vector is None:
                 raise KeyError(key)
+        else:
+            vector = self._check_dims(None, vector)
         if approximate:
-            idx = getattr(self, "_ann", None)
-            if idx is None:
+            if self._ann is None:
                 raise RuntimeError(
                     f"space {self.name} has no ANN index — call "
                     "build_ann_index() first"
                 )
-            hits = idx.search(
+            hits = self._ann.search(
                 vector, k, ef=ef,
                 exclude={key} if key is not None else None,
             )
             return [kk for kk, _ in hits]
+        if resident is not None:
+            record_branch("space_nearest_exact", "driver_resident",
+                          detail=f"{len(resident)} vectors")
+            return _l2_topk(resident, vector, k, exclude=key)
+        record_branch("space_nearest_exact", "spark_bruteforce",
+                      detail=f"base + {len(self._buf)} overlay vectors")
         cur = self._current()
-        q = self.spark.createDataFrame([(0, [float(x) for x in vector])],
-                                       ["query_id", "query_vec"])
+        q = self.spark.createDataFrame([(0, vector)], ["query_id", "query_vec"])
         hits = knn_bruteforce(
             cur, q, k + (1 if key is not None else 0),
             id_col="key", vec_col="embedding", metric="l2", dim=self.dims,

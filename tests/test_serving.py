@@ -373,3 +373,176 @@ def test_features_serve_with_freshness_budget(spark, tmp_path):
         [("f", "v1")], {"entity": 999},
         max_staleness_seconds=60, now=now,
     ) == [None]
+
+
+def _space_rows(n: int, dim: int, seed: int) -> dict[str, list[float]]:
+    """``n`` seeded float32 vectors keyed k0000…, plus planted exact
+    ties: permutations of one coordinate multiset (the same distance
+    from the origin, summed in any order) and copies of one vector."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = {f"k{i:04d}": rng.normal(0.0, 1.0, dim).astype(np.float32).tolist()
+            for i in range(n)}
+    for name, head in (("tie_c", [1.0, 2.0]), ("tie_a", [2.0, 1.0]),
+                       ("tie_b", [0.0, 1.0, 2.0])):
+        rows[name] = (head + [0.0] * dim)[:dim]
+    for name in ("dup_z", "dup_m", "dup_a"):
+        rows[name] = list(rows["k0007"])
+    return rows
+
+
+def _base_df(spark, rows):
+    from pyspark.sql.types import ArrayType, FloatType, StringType, StructField, StructType
+
+    schema = StructType([StructField("key", StringType()),
+                         StructField("embedding", ArrayType(FloatType()))])
+    return spark.createDataFrame(sorted(rows.items()), schema)
+
+
+def test_space_exact_nn_driver_path_matches_spark(spark, tmp_path):
+    """The exact kNN answers from driver-resident vectors exactly as the
+    Spark ``knn_bruteforce`` job does. The same space state is held
+    three ways: an index-less base + overlay (forced onto Spark), the
+    same plus ``build_ann_index`` and a later ``set`` (driver, HNSW
+    vectors), and the whole state as an overlay with no base (driver,
+    overlay vectors). Covers an overlay key shadowing a base key,
+    planted exact-distance ties, key and vector queries and k larger
+    than the space; lists must be identical, ties ordered by key."""
+    from embeddinghub_spark.observability import last_branch
+
+    dim = 16
+    base = _space_rows(60, dim, seed=11)
+    writes = {"k0003": [1.0] * dim, "new_1": [1.25] * dim, "dup_q": list(base["k0007"])}
+    late = {"late": [0.75] * dim, "k0010": [-1.0] * dim}
+    hub = EmbeddingHub(spark)
+    on_spark = hub.create_space("nn_spark", dims=dim)
+    on_spark.load_dataframe(_base_df(spark, base), serving_index=False)
+    indexed = hub.create_space("nn_indexed", dims=dim)
+    indexed.load_dataframe(_base_df(spark, base), serving_path=str(tmp_path / "idx"),
+                           n_buckets=4)
+    for sp in (on_spark, indexed):
+        sp.multiset(writes)
+    indexed.build_ann_index(m=8, ef_construction=40)
+    for sp in (on_spark, indexed):
+        sp.multiset(late)  # after the build: the index must track it
+    overlay_only = hub.create_space("nn_overlay", dims=dim)
+    overlay_only.multiset({**base, **writes, **late})
+
+    n = len({**base, **writes, **late})
+    queries = [
+        dict(k=3, vector=[0.0] * dim),        # three planted ties at sqrt(5)
+        dict(k=5, key="k0007"),               # four copies at distance 0
+        dict(k=4, key="k0003"),               # overlay shadows the base
+        dict(k=6, key="late"),                # set after the build
+        dict(k=n + 5, vector=base["k0001"]),  # k larger than the space
+    ]
+    for q in queries:
+        want = on_spark.nearest_neighbor(**q)
+        assert last_branch("space_nearest_exact") == "spark_bruteforce"
+        for sp in (indexed, overlay_only):
+            assert sp.nearest_neighbor(**q) == want, (sp.name, q)
+            assert last_branch("space_nearest_exact") == "driver_resident"
+    assert on_spark.nearest_neighbor(**queries[0]) == ["tie_a", "tie_b", "tie_c"]
+    assert indexed.nearest_neighbor(**queries[1])[:4] == ["dup_a", "dup_m", "dup_q", "dup_z"]
+    assert len(overlay_only.nearest_neighbor(**queries[-1])) == n
+    assert "k0001" in overlay_only.nearest_neighbor(**queries[-1])  # vector query keeps it
+
+
+def test_space_exact_nn_on_indexed_space_runs_no_spark_job(spark, tmp_path):
+    """A bench-sized space (1,000 loaded + 252 written keys, 16 dims,
+    8 buckets, ANN index built) answers exact kNN with zero Spark jobs;
+    dropping the index (a reload) puts the query back on Spark, which
+    the job tracker sees."""
+    import numpy as np
+
+    from embeddinghub_spark.observability import last_branch
+
+    dim = 16
+    rows = _space_rows(1000, dim, seed=5)
+    sp = EmbeddingHub(spark).create_space("nn_bench", dims=dim)
+    base = _base_df(spark, rows)
+    sp.load_dataframe(base, serving_path=str(tmp_path / "a"), n_buckets=8)
+    sp.build_ann_index()
+    rng = np.random.default_rng(6)
+    for i in range(252):
+        sp.set(f"w{i:03d}", rng.normal(0.0, 1.0, dim).tolist())
+    tracker = spark.sparkContext.statusTracker()
+
+    before = set(tracker.getJobIdsForGroup())
+    by_key = sp.nearest_neighbor(10, key="k0042")
+    by_vec = sp.nearest_neighbor(10, vector=rows["k0042"])
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert last_branch("space_nearest_exact") == "driver_resident"
+    assert by_vec[0] == "k0042" and by_key[:9] == by_vec[1:]
+
+    sp.load_dataframe(base, serving_path=str(tmp_path / "b"), n_buckets=8)
+    before = set(tracker.getJobIdsForGroup())
+    sp.nearest_neighbor(10, key="k0042")
+    assert set(tracker.getJobIdsForGroup()) - before
+    assert last_branch("space_nearest_exact") == "spark_bruteforce"
+
+
+def test_space_values_are_float32(spark):
+    """Writes round to float32 once, so get, multiget, download and the
+    ANN index all see the same value; None/NaN/inf components raise a
+    ValueError naming the key and stage nothing."""
+    from array import array
+
+    sp = EmbeddingHub(spark).create_space("f32", dims=2)
+    sp.set("x", [0.1, 0.2])
+    want = array("f", [0.1, 0.2]).tolist()
+    assert want != [0.1, 0.2]
+    assert sp.get("x") == want
+    assert sp.multiget(["x"]) == {"x": want}
+    assert [list(r["embedding"]) for r in sp.download().collect()] == [want]
+    sp.build_ann_index()
+    sp.set("y", [0.3, 0.4])  # after the build, as before it
+    assert sp._ann.vectors()["y"] == tuple(sp.get("y"))
+    assert sp._ann.vectors()["x"] == tuple(want)
+    for bad in ([None, 1.0], [float("nan"), 1.0], [float("inf"), 1.0], [1e39, 1.0]):
+        with pytest.raises(ValueError, match="'bad'"):
+            sp.multiset({"ok": [1.0, 1.0], "bad": bad})
+    assert sp.get("ok") is None
+
+
+def test_space_nn_validates_query(spark):
+    """A query vector of the wrong dimension or with a NaN raises on the
+    exact path (driver and Spark) as on the approximate one, and so
+    does k < 1."""
+    hub = EmbeddingHub(spark)
+    driver = hub.create_space("q_driver", dims=2)
+    driver.multiset({"x": [0.0, 1.0], "y": [1.0, 0.0]})
+    on_spark = hub.create_space("q_spark", dims=2)
+    on_spark.load_dataframe(_base_df(spark, {"x": [0.0, 1.0]}), serving_index=False)
+    driver.build_ann_index()
+    for sp, approx in ((driver, False), (driver, True), (on_spark, False)):
+        with pytest.raises(ValueError, match="dim 1, space expects 2"):
+            sp.nearest_neighbor(1, vector=[0.0], approximate=approx)
+        with pytest.raises(ValueError, match="query vector"):
+            sp.nearest_neighbor(1, vector=[float("nan"), 0.0], approximate=approx)
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            sp.nearest_neighbor(0, vector=[0.0, 0.0], approximate=approx)
+
+
+def test_space_reload_drops_stale_ann_index(spark):
+    """``load_dataframe`` after ``build_ann_index`` drops the index:
+    approximate queries ask for a rebuild instead of answering from the
+    old graph, and exact ones run on Spark over the new base."""
+    from embeddinghub_spark.observability import last_branch
+
+    sp = EmbeddingHub(spark).create_space("reload", dims=2)
+    sp.load_dataframe(_base_df(spark, {"a": [0.0, 0.0], "b": [9.0, 9.0]}),
+                      serving_index=False)
+    sp.build_ann_index()
+    assert sp.nearest_neighbor(1, vector=[0.0, 0.1], approximate=True) == ["a"]
+    sp.load_dataframe(_base_df(spark, {"b": [0.0, 0.2], "c": [0.0, 0.3]}),
+                      serving_index=False)
+    with pytest.raises(RuntimeError, match="build_ann_index"):
+        sp.nearest_neighbor(1, vector=[0.0, 0.1], approximate=True)
+    assert sp.nearest_neighbor(2, vector=[0.0, 0.1]) == ["b", "c"]
+    assert last_branch("space_nearest_exact") == "spark_bruteforce"
+    sp.build_ann_index()
+    assert sp.nearest_neighbor(1, vector=[0.0, 0.1], approximate=True) == ["b"]
+    assert sp.nearest_neighbor(2, vector=[0.0, 0.1]) == ["b", "c"]
+    assert last_branch("space_nearest_exact") == "driver_resident"
